@@ -108,8 +108,10 @@ object EtlBench {
     val out = java.nio.file.Files.createTempDirectory("graft-etl-bench").toString
     val (g, _) = timed(Grounding.compute(epmc, ids, targets, diseases, drugs))
     val (_, tGround) = timed {
-      Processing.filterMatches(g("matches")).write.parquet(s"$out/matches")
-      Processing.filterCooccurrences(g("cooccurrences")).write.parquet(s"$out/coocs")
+      try {
+        Processing.filterMatches(g("matches")).write.parquet(s"$out/matches")
+        Processing.filterCooccurrences(g("cooccurrences")).write.parquet(s"$out/coocs")
+      } finally Grounding.unpersist(g)
     }
     val matches = spark.read.parquet(s"$out/matches")
     val coocs = spark.read.parquet(s"$out/coocs")

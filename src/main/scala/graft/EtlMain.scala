@@ -34,6 +34,14 @@ import graft.etl._
   * inference on JSON is a full extra pass over the corpus and is never
   * the default (core/Io.scala scaladoc).
   * Step-to-step inputs are read from the standard locations under out=.
+  *
+  * The processing step grounds the corpus once: `Grounding.compute`
+  * caches the repaired sentence frame and the grounded-label table, the
+  * four grounding outputs are written from those caches, and the caches
+  * are freed as soon as those writes end, on success or failure, so a
+  * long-lived session keeps nothing. The literature index is then built
+  * from the `matches` just written, read back like every later step
+  * reads it.
   */
 object EtlMain {
 
@@ -85,9 +93,12 @@ object EtlMain {
         Io.read(spark, cfg.readSpec("targets", "parquet")),
         Io.read(spark, cfg.readSpec("diseases", "parquet")),
         Io.read(spark, cfg.readSpec("drugs", "parquet")))
-      val p = Processing.compute(g, spark, cfg.sectionRanks)
-      Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences",
-        "literatureIndex").foreach(n => w(n, p(n)))
+      try {
+        val p = Processing.compute(g)
+        Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences")
+          .foreach(n => w(n, p(n)))
+      } finally Grounding.unpersist(g)
+      w("literatureIndex", Processing.literatureIndex(r("matches"), spark, cfg.sectionRanks))
     }
 
     def embedding(): Unit = {

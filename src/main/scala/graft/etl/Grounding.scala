@@ -317,20 +317,30 @@ object Grounding {
     (valid, merged.filter(!col("isMapped")))
   }
 
-  /** Full grounding pass: id repair → LUT → label grounding → match +
-    * co-occurrence resolution (reference compute, Grounding.scala:563–610).
+  /** Grounding of a raw EPMC frame against a prebuilt id lookup
+    * (`loadEpmcIds`) and entity LUT (`entityLut`): id repair → label
+    * grounding → match + co-occurrence resolution. The batch pass
+    * (`compute`) and every streaming micro-batch run through here.
+    *
+    * Two frames are persisted MEMORY_AND_DISK, lazily (no job runs here):
+    *  - "sentences": the repaired, exploded sentence frame. Every output
+    *    reads it, so without it each output write re-parses the EPMC JSON
+    *    and re-runs the id repair;
+    *  - "mappedLabels": the grounded-label table. Both resolves read it
+    *    (matches and two co-occurrence sides), so without it the
+    *    vocabulary scan + stemming + LUT join subtree runs three times
+    *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
+    * The first evaluated output fills both caches. They stay until the
+    * caller passes the result to `unpersist`, which it must do once the
+    * outputs it needs are written, on every exit path.
     */
-  def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
-      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] = {
-    val idLut = loadEpmcIds(epmcIds)
-    val lut = entityLut(targets, diseases, drugs)
+  def ground(epmc: DataFrame, idLut: DataFrame, lut: DataFrame): Map[String, DataFrame] = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // persisted before mapEntities reads it, so the `mapped` cache plan
+    // reads the sentence cache instead of the corpus
     val sentences = filterSentences(loadSentences(graft.core.SchemaTools.replaceSpaces(epmc), idLut))
-    // persist: the grounded-label table feeds BOTH resolves (matches and
-    // two cooccurrence sides) — without it the vocabulary scan + stemming
-    // + LUT join subtree runs three times (reference Grounding.scala:603
-    // persists the same frame DISK_ONLY)
-    val mapped = mapEntities(sentences, lut)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(level)
+    val mapped = mapEntities(sentences, lut).persist(level)
     val (matches, matchesFailed) = resolveMatches(sentences, mapped)
     val (coocs, coocsFailed) = resolveCooccurrences(sentences, mapped)
     Map(
@@ -338,6 +348,24 @@ object Grounding {
       "matchesFailed" -> matchesFailed,
       "cooccurrences" -> coocs,
       "cooccurrencesFailed" -> coocsFailed,
-      "mappedLabels" -> mapped)
+      "mappedLabels" -> mapped,
+      "sentences" -> sentences)
+  }
+
+  /** Full grounding pass (reference compute, Grounding.scala:563–610):
+    * builds the id lookup and the entity LUT, then `ground`s the corpus.
+    * The result holds cached frames: free them with `unpersist`.
+    */
+  def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
+      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] =
+    ground(epmc, loadEpmcIds(epmcIds), entityLut(targets, diseases, drugs))
+
+  /** Frees the frames `ground` persisted. The grounded-label cache goes
+    * first: it is built over the sentence cache, and dropping the
+    * sentences first would make Spark re-plan it.
+    */
+  def unpersist(grounding: Map[String, DataFrame]): Unit = {
+    grounding("mappedLabels").unpersist()
+    grounding("sentences").unpersist()
   }
 }

@@ -140,19 +140,15 @@ object Processing {
     countsPerKey.join(aggregated, Seq("pmid"), "left_outer")
   }
 
-  /** Full processing outputs over a grounding result (reference apply,
-    * Processing.scala:180–223): matches/cooccurrences (valid + failed) and
-    * the literature index.
+  /** The grounding outputs of the processing step (reference apply,
+    * Processing.scala:180–223): matches/cooccurrences, valid and failed.
+    * The step's fifth output, the literature index, is `literatureIndex`
+    * over the `matches` written from here, read back.
     */
-  def compute(grounding: Map[String, DataFrame], spark: SparkSession,
-      ranks: Seq[SectionRank] = SectionRanks.default): Map[String, DataFrame] = {
-    val matches = filterMatches(grounding("matches"))
-    val coocs = filterCooccurrences(grounding("cooccurrences"))
+  def compute(grounding: Map[String, DataFrame]): Map[String, DataFrame] =
     Map(
-      "matches" -> matches,
-      "cooccurrences" -> coocs,
+      "matches" -> filterMatches(grounding("matches")),
+      "cooccurrences" -> filterCooccurrences(grounding("cooccurrences")),
       "failedMatches" -> grounding("matchesFailed"),
-      "failedCooccurrences" -> grounding("cooccurrencesFailed"),
-      "literatureIndex" -> literatureIndex(matches, spark, ranks))
-  }
+      "failedCooccurrences" -> grounding("cooccurrencesFailed"))
 }

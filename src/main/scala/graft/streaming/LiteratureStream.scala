@@ -12,8 +12,10 @@ import graft.etl.{Grounding, Processing}
   *
   * Shape: the entity LUT and id lookup are static, computed once and
   * reused across micro-batches; each batch of raw documents flows through
-  * the SAME batch grounding code via foreachBatch — one implementation,
-  * two execution modes, no semantic drift between them. Per-batch label
+  * the SAME batch grounding code (`Grounding.ground`) via foreachBatch —
+  * one implementation, two execution modes, no semantic drift between
+  * them. A batch is grounded once for all its sink's writes, and its
+  * cache is freed when the sink returns. Per-batch label
   * grounding only sees each batch's distinct new labels, so steady-state
   * cost tracks the arrival rate, not the corpus size.
   */
@@ -39,14 +41,11 @@ object LiteratureStream {
 
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
-        val sentences = Grounding.filterSentences(
-          Grounding.loadSentences(graft.core.SchemaTools.replaceSpaces(batch), idLut))
-        val mapped = Grounding.mapEntities(sentences, lut)
-        val (matches, _) = Grounding.resolveMatches(sentences, mapped)
-        val (coocs, _) = Grounding.resolveCooccurrences(sentences, mapped)
-        sink(BatchOutputs(batchId,
-          Processing.filterMatches(matches),
-          Processing.filterCooccurrences(coocs)))
+        val g = Grounding.ground(batch, idLut, lut)
+        try sink(BatchOutputs(batchId,
+          Processing.filterMatches(g("matches")),
+          Processing.filterCooccurrences(g("cooccurrences"))))
+        finally Grounding.unpersist(g)
       }
     }
   }

@@ -2,9 +2,17 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.SparkSpec
-import graft.etl.{EtlConfig, Fixtures}
+import graft.core.Io
+import graft.etl.{EpmcSchema, EtlConfig, Fixtures, Grounding, Processing}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end CLI-step dispatch over the fixture corpus: the run() body
   * EtlMain.main drives, against temp dirs.
@@ -12,22 +20,77 @@ import org.apache.spark.sql.functions._
 class EtlMainSpec extends SparkSpec {
   import spark.implicits._
 
-  "EtlMain.run" should "execute all steps and write every dataset" in {
-    val in = Files.createTempDirectory("graft-etl-in").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft-etl-out").toFile.getAbsolutePath + "/run"
-
+  /** Writes the fixture inputs under a new temp dir and returns it. */
+  private def inputs(prefix: String): String = {
+    val in = Files.createTempDirectory(prefix).toFile.getAbsolutePath
     Fixtures.epmc(spark).write.mode("overwrite").json(s"$in/epmc")
     Fixtures.epmcIds(spark).write.mode("overwrite").option("header", "true").csv(s"$in/ids")
     Fixtures.targets(spark).write.mode("overwrite").parquet(s"$in/targets")
     Fixtures.diseases(spark).write.mode("overwrite").parquet(s"$in/diseases")
     Fixtures.drugs(spark).write.mode("overwrite").parquet(s"$in/drugs")
+    in
+  }
 
-    EtlMain.run("all",
-      EtlConfig.load(None,
-        Map("epmc" -> s"$in/epmc", "epmcids" -> s"$in/ids", "targets" -> s"$in/targets",
-          "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs", "threshold" -> "-2.0",
-          "out" -> out)),
-      spark)
+  private def inputKeys(in: String): Map[String, String] =
+    Map("epmc" -> s"$in/epmc", "epmcids" -> s"$in/ids", "targets" -> s"$in/targets",
+      "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs")
+
+  private def newOut(prefix: String): String =
+    Files.createTempDirectory(prefix).toFile.getAbsolutePath + "/run"
+
+  /** The literature index EtlMain wrote (built from the `matches` it read
+    * back) equals `Processing.literatureIndex` over the in-memory grounding
+    * of the same inputs: same columns and types, same rows. Nullability is
+    * not compared: no file round trip keeps it.
+    */
+  private def indexUnchanged(cfg: EtlConfig): Unit = {
+    val g = Grounding.compute(
+      Io.read(spark, cfg.readSpec("epmc", "json", Some(EpmcSchema.schema))),
+      Io.read(spark, cfg.readSpec("epmcids", "csv", None, Map("header" -> "true"))),
+      Io.read(spark, cfg.readSpec("targets", "parquet")),
+      Io.read(spark, cfg.readSpec("diseases", "parquet")),
+      Io.read(spark, cfg.readSpec("drugs", "parquet")))
+    try {
+      val expected = Processing.literatureIndex(
+        Processing.filterMatches(g("matches")), spark, cfg.sectionRanks)
+      val written = Io.read(spark, Io.ReadSpec(cfg.format, s"${cfg.out}/literatureIndex"))
+      written.schema.map(f => f.name -> f.dataType) shouldBe
+        expected.schema.map(f => f.name -> f.dataType)
+      written.count() should be > 0L
+      written.exceptAll(expected).count() shouldBe 0L
+      expected.exceptAll(written).count() shouldBe 0L
+    } finally Grounding.unpersist(g)
+  }
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** JSON scans over `dir` that running `plan` performs: those outside
+    * any InMemoryTableScanExec, plus those inside the plan of a cache that
+    * `plan` is the first to read (the read fills the cache; `filled` holds
+    * the caches read so far). A later read of a filled cache scans nothing.
+    */
+  private def jsonScans(plan: SparkPlan, dir: String,
+      filled: java.util.Set[AnyRef]): Seq[FileSourceScanExec] = plan match {
+    case f: FileSourceScanExec =>
+      if (f.relation.fileFormat.isInstanceOf[JsonFileFormat] &&
+        f.relation.location.rootPaths.exists(_.toUri.getPath == dir)) Seq(f)
+      else Nil
+    case m: InMemoryTableScanExec =>
+      if (filled.add(m.relation.cacheBuilder)) jsonScans(m.relation.cachedPlan, dir, filled)
+      else Nil
+    case a: AdaptiveSparkPlanExec => jsonScans(a.executedPlan, dir, filled)
+    case q: QueryStageExec => jsonScans(q.plan, dir, filled)
+    case p => (p.children ++ p.subqueries).flatMap(jsonScans(_, dir, filled))
+  }
+
+  "EtlMain.run" should "execute all steps and write every dataset" in {
+    val in = inputs("graft-etl-in")
+    val out = newOut("graft-etl-out")
+
+    val cfg = EtlConfig.load(None, inputKeys(in) ++ Map("threshold" -> "-2.0", "out" -> out))
+    EtlMain.run("all", cfg, spark)
+    indexUnchanged(cfg)
 
     val matches = spark.read.parquet(s"$out/matches")
     matches.count() shouldBe 9
@@ -62,14 +125,14 @@ class EtlMainSpec extends SparkSpec {
 
   it should "read EPMC with the declared schema (no inference pass) and " +
     "shape outputs from config" in {
-    val in = Files.createTempDirectory("graft-sch-in").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft-sch-out").toFile.getAbsolutePath + "/run"
-
-    Fixtures.epmc(spark).write.mode("overwrite").json(s"$in/epmc")
-    Fixtures.epmcIds(spark).write.mode("overwrite").option("header", "true").csv(s"$in/ids")
-    Fixtures.targets(spark).write.mode("overwrite").parquet(s"$in/targets")
-    Fixtures.diseases(spark).write.mode("overwrite").parquet(s"$in/diseases")
-    Fixtures.drugs(spark).write.mode("overwrite").parquet(s"$in/drugs")
+    val in = inputs("graft-sch-in")
+    val out = newOut("graft-sch-out")
+    // one more grounded document with no pubDate: its year is null, so
+    // the year-partitioned matches get a __HIVE_DEFAULT_PARTITION__
+    Seq("""{"pmid":"7","pmcid":"PMC7","organisms":[],"journal info":{"name":"J7"},""" +
+      """"sentences":[{"section":"Title","text":"asthma again","matches":[{"label":"asthma",""" +
+      """"type":"DS","startInSentence":0,"endInSentence":6,"sectionStart":0,"sectionEnd":6}],""" +
+      """"co-occurrence":[]}]}""").toDS().write.mode("append").text(s"$in/epmc")
 
     val yaml =
       s"""out: $out
@@ -116,27 +179,24 @@ class EtlMainSpec extends SparkSpec {
       new java.io.File(matchesDir, p).listFiles()
         .count(_.getName.endsWith(".parquet")) shouldBe 1
     }
+    partDirs should contain("year=__HIVE_DEFAULT_PARTITION__")
     new java.io.File(s"$out/literatureIndex").listFiles()
       .count(_.getName.endsWith(".parquet")) shouldBe 1
-    // results identical to the inference path
-    spark.read.parquet(s"$out/matches").count() shouldBe 9
+    // results identical to the inference path: the fixture's 9 matches
+    // plus the undated document's one
+    spark.read.parquet(s"$out/matches").count() shouldBe 10
+    // the index is built from the read-back matches, where year is a
+    // partition column
+    Io.read(spark, Io.ReadSpec("parquet", s"$out/matches")).columns.last shouldBe "year"
+    indexUnchanged(cfg)
   }
 
   it should "run the pipeline with json outputs (reference default) schema-exactly" in {
-    val in = Files.createTempDirectory("graft-json-in").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft-json-out").toFile.getAbsolutePath + "/run"
+    val in = inputs("graft-json-in")
+    val out = newOut("graft-json-out")
 
-    Fixtures.epmc(spark).write.mode("overwrite").json(s"$in/epmc")
-    Fixtures.epmcIds(spark).write.mode("overwrite").option("header", "true").csv(s"$in/ids")
-    Fixtures.targets(spark).write.mode("overwrite").parquet(s"$in/targets")
-    Fixtures.diseases(spark).write.mode("overwrite").parquet(s"$in/diseases")
-    Fixtures.drugs(spark).write.mode("overwrite").parquet(s"$in/drugs")
-
-    val cfg = EtlConfig.load(None,
-      Map("epmc" -> s"$in/epmc", "epmcids" -> s"$in/ids", "targets" -> s"$in/targets",
-        "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs",
-        "format" -> "json", "w2v.vectorSize" -> "8", "w2v.maxIter" -> "1",
-        "out" -> out))
+    val cfg = EtlConfig.load(None, inputKeys(in) ++ Map(
+      "format" -> "json", "w2v.vectorSize" -> "8", "w2v.maxIter" -> "1", "out" -> out))
     // the reference's common.output-format default is json
     // (reference.conf:22); step-to-step read-back must not pay a schema
     // inference pass — Io's sidecar carries the written schema
@@ -145,6 +205,7 @@ class EtlMainSpec extends SparkSpec {
     spark.read.json(s"$out/matches").count() shouldBe 9
     new java.io.File(s"$out/matches/_graft_schema.json").exists() shouldBe true
     spark.read.json(s"$out/trainingSet").count() should be > 0L
+    indexUnchanged(cfg)
   }
 
   it should "fail fast on unexpected YAML lists and unknown output keys" in {
@@ -181,14 +242,8 @@ class EtlMainSpec extends SparkSpec {
   }
 
   it should "run a step from a YAML config file with CLI overrides on top" in {
-    val in = Files.createTempDirectory("graft-cfg-in").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft-cfg-out").toFile.getAbsolutePath + "/run"
-
-    Fixtures.epmc(spark).write.mode("overwrite").json(s"$in/epmc")
-    Fixtures.epmcIds(spark).write.mode("overwrite").option("header", "true").csv(s"$in/ids")
-    Fixtures.targets(spark).write.mode("overwrite").parquet(s"$in/targets")
-    Fixtures.diseases(spark).write.mode("overwrite").parquet(s"$in/diseases")
-    Fixtures.drugs(spark).write.mode("overwrite").parquet(s"$in/drugs")
+    val in = inputs("graft-cfg-in")
+    val out = newOut("graft-cfg-out")
 
     // a release-overlay-style config: custom section ranks (title only,
     // weight 2.0) and shrunk w2v — no recompile
@@ -224,5 +279,56 @@ class EtlMainSpec extends SparkSpec {
     idx.count() should be > 0L
     idx.filter(col("pmid") === 1L && col("keywordId") === "ENSG0001")
       .select("relevance").as[Double].head() shouldBe 2.0 +- 0.01
+  }
+
+  it should "leave nothing cached after processing, whether it succeeds or a write fails" in {
+    val in = inputs("graft-leak-in")
+    // other suites' cached frames live in this shared session
+    spark.catalog.clearCache()
+    EtlMain.run("processing", EtlConfig.load(None, inputKeys(in) + ("out" -> newOut("graft-leak-ok"))),
+      spark)
+    cacheManager.isEmpty shouldBe true
+
+    // the fourth grounding write fails, after the first three have filled
+    // the grounding caches
+    val out = newOut("graft-leak-fail")
+    intercept[Exception] {
+      EtlMain.run("processing", EtlConfig.load(None, inputKeys(in) ++ Map(
+        "out" -> out, "outputs.failedCooccurrences.partitionBy" -> "noSuchColumn")), spark)
+    }
+    new java.io.File(s"$out/failedMatches/_SUCCESS").exists() shouldBe true
+    cacheManager.isEmpty shouldBe true
+  }
+
+  it should "scan the EPMC input once in the processing step" in {
+    val in = inputs("graft-scan-in")
+    val epmcDir = new java.io.File(s"$in/epmc").getAbsolutePath
+    val scanning = ArrayBuffer[String]()
+    val filled = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    @volatile var markerSeen = false
+    // events arrive one at a time, in order, on the listener bus thread
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (jsonScans(qe.executedPlan, epmcDir, filled).nonEmpty) scanning.synchronized(scanning += funcName)
+        if (qe.toString.contains("graft_scan_marker")) markerSeen = true
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.catalog.clearCache()
+    spark.listenerManager.register(listener)
+    try {
+      EtlMain.run("processing", EtlConfig.load(None, inputKeys(in) + ("out" -> newOut("graft-scan"))),
+        spark)
+      // listener events arrive in order: once the marker's is in, every
+      // plan of the step has been seen
+      spark.range(1).toDF("graft_scan_marker").write.format("noop").mode("overwrite").save()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      markerSeen shouldBe true
+    } finally spark.listenerManager.unregister(listener)
+    // the first grounding write reads the corpus to fill the sentence
+    // cache; the other writes read that cache, and the index reads the
+    // written matches
+    scanning.synchronized(scanning.size) shouldBe 1
   }
 }

@@ -12,7 +12,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val g = Fixtures.grounding(spark)
-  private lazy val processed = Processing.compute(g, spark)
+  private lazy val processed = Processing.compute(g)
   private lazy val matches = processed("matches").cache()
   private lazy val coocs = processed("cooccurrences").cache()
 
@@ -22,7 +22,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   "literatureIndex" should "compute section-weighted harmonic relevance" in {
-    val idx = processed("literatureIndex").cache()
+    val idx = Processing.literatureIndex(matches, spark).cache()
 
     // doc1 / ENSG0001: title once (w=1.0) + results twice (w=0.6, rank 2)
     // → relevance = 1/1 + 0.6/4 + 0.6/9

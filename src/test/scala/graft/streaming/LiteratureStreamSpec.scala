@@ -89,4 +89,40 @@ class LiteratureStreamSpec extends SparkSpec {
     // and the input really was split across micro-batches
     matches.select("batch_id").distinct().count() should be > 1L
   }
+
+  it should "ground each micro-batch once and free its cache after the sink" in {
+    val landing = Files.createTempDirectory("graft-landing3").toFile.getAbsolutePath
+    val staticDocs = Fixtures.epmc(spark)
+    staticDocs.write.mode("overwrite").json(landing)
+    val stream = spark.readStream.schema(staticDocs.schema)
+      .option("maxFilesPerTrigger", "1")
+      .json(landing)
+
+    // RDD ids only grow: every RDD persisted from here on has a larger id
+    val sc = spark.sparkContext
+    val watermark = sc.emptyRDD[Int].id
+    def persistedSince: Int = sc.getPersistentRDDs.keys.count(_ > watermark)
+
+    var matchTotal = 0L
+    val persistedAtSinkEnd = scala.collection.mutable.ArrayBuffer[Int]()
+    val writer = LiteratureStream.groundingWriter(
+      stream, Fixtures.epmcIds(spark), Fixtures.targets(spark),
+      Fixtures.diseases(spark), Fixtures.drugs(spark),
+      out => {
+        matchTotal += out.matches.count()
+        out.cooccurrences.count()
+        persistedAtSinkEnd += persistedSince
+      })
+    val q = LiteratureStream.backfill(writer)
+    assert(q.awaitTermination(300000), "stream did not terminate in 300 s")
+
+    matchTotal shouldBe 9L
+    persistedAtSinkEnd.size should be > 1
+    // each batch holds its own grounding cache while its sink runs (plus
+    // the static lookups, cached once) and frees it afterwards: an
+    // unfreed batch would add its cached frames to every later count
+    withClue(s"persisted RDDs at each sink's end: $persistedAtSinkEnd") {
+      persistedAtSinkEnd.distinct.size shouldBe 1
+    }
+  }
 }
